@@ -165,34 +165,34 @@ def test_redelivery_and_compaction(spark, cfg, split_corpus, tmp_path):
     assert find_conflicts(sd.stored_decisions()).count() == 0
 
 
-def test_containment_pair_split_across_batches(spark, cfg, tmp_path):
-    """VERDICT r2 #4: the substring arm is incremental — a containment pair
-    whose inner and outer docs arrive in DIFFERENT micro-batches is found,
-    in both directions (inner-first and outer-first)."""
+def _turns_pdf(rows):
+    """(conv_id, text) rows -> one single-turn conversation each."""
     import datetime as dt
 
     import pandas as pd
 
     ts = dt.datetime(2026, 1, 1)
+    return pd.DataFrame(
+        [(c, 0, "user", t, "", ts) for c, t in rows],
+        columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
+    ).astype({"turn_idx": "int32"})
+
+
+def test_containment_pair_split_across_batches(spark, cfg, tmp_path):
+    """VERDICT r2 #4: the substring arm is incremental — a containment pair
+    whose inner and outer docs arrive in DIFFERENT micro-batches is found,
+    in both directions (inner-first and outer-first)."""
     inner1 = "the quick brown fox jumps over the lazy dog near the riverbank today"
     outer1 = "padding before the interesting part " + inner1 + " and plenty of trailing context afterwards"
     inner2 = "completely different marker sentence about spark shuffles and arrow batches"
     outer2 = "intro text " + inner2 + " closing remarks that make this conversation longer"
 
-    def turns(conv_id, text):
-        return (conv_id, 0, "user", text, "", ts)
-
     # batch 0: inner1 + outer2 (+ filler); batch 1: outer1 + inner2
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    b0 = pd.DataFrame(
-        [turns("in1", inner1), turns("out2", outer2)]
-        + [turns(f"f{i}", f"unrelated filler text number {i} with words") for i in range(4)],
-        columns=cols,
-    ).astype({"turn_idx": "int32"})
-    b1 = pd.DataFrame(
-        [turns("out1", outer1), turns("in2", inner2)],
-        columns=cols,
-    ).astype({"turn_idx": "int32"})
+    b0 = _turns_pdf(
+        [("in1", inner1), ("out2", outer2)]
+        + [(f"f{i}", f"unrelated filler text number {i} with words") for i in range(4)]
+    )
+    b1 = _turns_pdf([("out1", outer1), ("in2", inner2)])
 
     sd = StreamingDedup(spark, str(tmp_path / "state"), cfg)
     sd.process_batch(corpus_to_spark(spark, b0), 0)
@@ -207,6 +207,188 @@ def test_containment_pair_split_across_batches(spark, cfg, tmp_path):
     comps = {r["conv_id"]: r["component_id"] for r in sd.stored_components().collect()}
     assert comps["in1"] == comps["out1"]
     assert comps["in2"] == comps["out2"]
+
+
+# single-turn conversations: two exact-duplicate families and unrelated
+# singletons
+_DUP_A = "a vendor invoice was reconciled against the purchase order ledger on friday"
+_DUP_B = "the hiking trail above the glacier lake closes after the first autumn snowfall"
+_SINGLES = [
+    "quantum error correction needs many physical qubits per logical qubit",
+    "sourdough bread rises slowly when the kitchen stays cold overnight",
+    "parliament debated the fisheries quota amendment until past midnight",
+    "my bicycle chain squeaks because nobody oiled it since spring",
+]
+
+
+def _decision_rows(df):
+    cols = [c for c in df.columns if c != "_seq"]
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.select(*sorted(cols)).collect()
+    )
+
+
+def _delta_rows(sd, table):
+    return [s["delta_rows"] for s in sd.io._load()["tables"][table]["snapshots"]]
+
+
+def test_failed_batch_releases_caches(spark, cfg, tmp_path, monkeypatch):
+    """A stage that fails mid-batch releases every frame the batch
+    persisted: no CacheManager entry and no persistent RDD it created
+    survives (local-checkpoint blocks are left to the context cleaner)."""
+    from pyspark import StorageLevel
+
+    from transcript_dedup import streaming
+
+    sd = StreamingDedup(spark, str(tmp_path / "state"), cfg, compact_every=0)
+    base = [("a1", _DUP_A), ("a2", _DUP_A)] + [
+        (f"s{i}", t) for i, t in enumerate(_SINGLES)
+    ]
+    sd.process_batch(corpus_to_spark(spark, _turns_pdf(base)), 0)
+
+    sc = spark.sparkContext
+
+    def cached_rdds():
+        m = sc._jsc.getPersistentRDDs()
+        return {int(k) for k in m.keySet() if not m[k].rdd().isLocallyCheckpointed()}
+
+    persisted = []
+    frame_cls = type(spark.range(1))  # the concrete (classic) DataFrame class
+    real_persist = frame_cls.persist
+
+    def recording_persist(self, *a, **kw):
+        persisted.append(self)
+        return real_persist(self, *a, **kw)
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected decide failure")
+
+    before = cached_rdds()
+    monkeypatch.setattr(frame_cls, "persist", recording_persist)
+    monkeypatch.setattr(streaming, "make_decisions", boom)
+    # re-delivered a2 + new duplicates: new, redelivered, all_ and the
+    # re-solved components are all persisted before decide runs
+    batch = [("a2", _DUP_A), ("b1", _DUP_B), ("b2", _DUP_B)]
+    with pytest.raises(RuntimeError, match="injected decide failure"):
+        sd.process_batch(corpus_to_spark(spark, _turns_pdf(batch)), 1)
+    monkeypatch.undo()
+
+    assert len(persisted) >= 4
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+    assert cached_rdds() <= before
+
+
+def test_four_batches_with_compaction_equal_batch(spark, cfg, split_corpus, tmp_path):
+    """Four micro-batches with compaction every second batch: duplicate
+    families split across batches, re-delivered ids (unchanged and edited)
+    in every batch after the first. The committed decisions equal one
+    DedupPipeline.run over the last-write-wins union, so no frame one batch
+    checkpointed is read by the next batch or after a compaction."""
+    import pandas as pd
+
+    from transcript_dedup.pipeline import DedupPipeline
+
+    _, turns_pdf, truth = split_corpus
+    convs = sorted(turns_pdf.conv_id.unique())
+    parts = [convs[k::4] for k in range(4)]
+    batch_of = {c: k for k, p in enumerate(parts) for c in p}
+    split_families = truth.assign(b=truth.conv_id.map(batch_of)).groupby(
+        "truth_cluster_id"
+    )["b"].nunique()
+    assert (split_families > 1).any()
+
+    deliveries = [turns_pdf[turns_pdf.conv_id.isin(parts[0])]]
+    final = {c: turns_pdf[turns_pdf.conv_id == c] for c in convs}
+    for k in (1, 2, 3):
+        same, edit = parts[k - 1][k], parts[k - 1][k + 4]
+        edited = turns_pdf[turns_pdf.conv_id == edit].copy()
+        edited["text"] = f"EDITED IN BATCH {k} " + edited["conv_id"] + " " + edited["turn_idx"].astype(str)
+        final[edit] = edited
+        deliveries.append(
+            pd.concat(
+                [
+                    turns_pdf[turns_pdf.conv_id.isin(parts[k])],
+                    turns_pdf[turns_pdf.conv_id == same],
+                    edited,
+                ],
+                ignore_index=True,
+            )
+        )
+
+    sd = StreamingDedup(spark, str(tmp_path / "state"), cfg, compact_every=2)
+    for k, pdf in enumerate(deliveries):
+        sd.process_batch(corpus_to_spark(spark, pdf), k)
+    # two ids re-delivered per batch; compaction after batches 1 and 3
+    assert _delta_rows(sd, "conv_deletes") == [2, 0, 2, 2, 0]
+
+    union = pd.concat(final.values(), ignore_index=True)
+    want = DedupPipeline(spark, str(tmp_path / "batch"), cfg).run(
+        corpus_to_spark(spark, union), input_fingerprint="union"
+    )["decisions"]
+    got = sd.stored_decisions()
+    assert _decision_rows(got) == _decision_rows(want)
+
+
+def test_redelivery_only_batch_without_new_edges(spark, cfg, tmp_path):
+    """A micro-batch of re-delivered conversations only, with no new
+    matched edge: a singleton comes back unchanged and a duplicate's member
+    comes back edited, which dissolves its component. The empty
+    checkpointed frames commit tombstones and nothing else."""
+    sd = StreamingDedup(spark, str(tmp_path / "state"), cfg, compact_every=0)
+    base = [("a1", _DUP_A), ("a2", _DUP_A), ("b1", _DUP_B), ("b2", _DUP_B)] + [
+        (f"s{i}", t) for i, t in enumerate(_SINGLES)
+    ]
+    sd.process_batch(corpus_to_spark(spark, _turns_pdf(base)), 0)
+    comps = {r["conv_id"]: r["component_id"] for r in sd.stored_components().collect()}
+    assert comps == {"a1": "a1", "a2": "a1", "b1": "b1", "b2": "b1"}
+
+    redelivery = [("s0", _SINGLES[0]), ("a2", "an edited reply about something else entirely")]
+    sd.process_batch(corpus_to_spark(spark, _turns_pdf(redelivery)), 1)
+
+    assert _delta_rows(sd, "conversations") == [8, 2]
+    assert sorted(r["conv_id"] for r in sd.io.read(spark, "conv_deletes").collect()) == [
+        "a2",
+        "s0",
+    ]
+    delta = sd.io.read(spark, "candidate_pairs").filter("_seq = 1")
+    assert delta.filter("is_match").count() == 0
+    # the dissolved component's members and the touched ids are tombstoned
+    assert sorted(
+        r["conv_id"]
+        for r in sd.io.read(spark, "component_deletes").filter("_seq = 1").collect()
+    ) == ["a1", "a2", "s0"]
+    assert _delta_rows(sd, "components") == [4, 0]
+    dead = sd.io.read(spark, "decision_deletes").filter("_seq = 1").collect()
+    assert [r["group_id"] for r in dead] == ["a1"]
+    assert _delta_rows(sd, "decisions") == [2, 0]
+
+    comps = {r["conv_id"]: r["component_id"] for r in sd.stored_components().collect()}
+    assert comps == {"b1": "b1", "b2": "b1"}
+    assert [r["group_id"] for r in sd.stored_decisions().collect()] == ["b1"]
+    assert sd.stored_conversations().count() == 8
+    assert sd.stored_pairs().filter("is_match").count() == 1
+
+
+def test_first_batch_without_matches(spark, cfg, tmp_path):
+    """A first micro-batch with no match at all commits its conversations
+    and empty pair, component and decision deltas; the next batch's match
+    against it is found."""
+    sd = StreamingDedup(spark, str(tmp_path / "state"), cfg, compact_every=0)
+    first = [(f"s{i}", t) for i, t in enumerate(_SINGLES)]
+    sd.process_batch(corpus_to_spark(spark, _turns_pdf(first)), 0)
+
+    assert _delta_rows(sd, "conversations") == [4]
+    assert sd.stored_pairs().filter("is_match").count() == 0
+    for table in ("components", "component_deletes", "decisions", "decision_deletes"):
+        assert _delta_rows(sd, table) == [0], table
+    assert sd.io.current_snapshot("conv_deletes") is None
+
+    sd.process_batch(corpus_to_spark(spark, _turns_pdf([("s1b", _SINGLES[1])])), 1)
+    comps = {r["conv_id"]: r["component_id"] for r in sd.stored_components().collect()}
+    assert comps == {"s1": "s1", "s1b": "s1"}
+    dec = sd.stored_decisions().collect()
+    assert [(r["group_id"], r["size"]) for r in dec] == [("s1", 2)]
 
 
 def test_windowed_turn_counts_watermark(spark, tmp_path):

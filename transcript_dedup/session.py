@@ -41,6 +41,13 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
+def _default_driver_mem() -> str:
+    """32 GiB, capped at half of physical memory so the local-mode JVM
+    leaves room for the Python workers on a small host."""
+    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(32 * 1024, half_mib)}m"
+
+
 def get_spark(
     app_name: str = "transcript-dedup",
     master: str | None = None,
@@ -83,8 +90,8 @@ def get_spark(
         .config("spark.python.worker.idleTimeoutSeconds", "0")
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver JVM hosts every executor thread — size it
-        # like a worker box (sandbox has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        # like a worker box, but never above half of this host's memory
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))

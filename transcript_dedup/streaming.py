@@ -26,6 +26,16 @@ streaming growth path with **O(batch) state maintenance per micro-batch**:
 Structured Streaming's checkpointLocation provides exactly-once micro-batch
 tracking on top; a stream can take over from a batch bootstrap because the
 state lives in the same TableIO tables.
+
+Lineage rule inside a micro-batch: every intermediate frame that more than
+one downstream write reads and that is O(batch) or O(churn) (new ids, the
+stored gram/df index, new pairs and matched edges, touched and affected ids,
+affected members, the affected stored pairs, the new decisions) is cut with
+``localCheckpoint()``, so it is planned and computed once. The O(corpus)
+``all_`` union stays ``persist()``ed. ``persist()`` on the small frames was
+measured worse: nested InMemoryRelation plans are re-rendered at every AQE
+update (2x slower, then a driver OOM in ``explainString``). The batch's
+persisted frames are released in a ``finally``, also when a stage fails.
 """
 
 from __future__ import annotations
@@ -109,7 +119,7 @@ def _incremental_substring(new: DataFrame, all_: DataFrame, cfg: DedupConfig) ->
     nonempty = all_.filter(F.length("norm_text") > 0)
     grams = nonempty.select("cid", F.explode("sub_grams").alias("gram"))
     sizes = grams.groupBy("gram").agg(F.count("*").alias("df"))
-    joined = grams.join(sizes, "gram")
+    joined = grams.join(sizes, "gram").localCheckpoint()
     kept = joined.filter(F.col("df") <= cfg.substring_gram_maxdf).select(
         "cid", "gram"
     )
@@ -121,7 +131,7 @@ def _incremental_substring(new: DataFrame, all_: DataFrame, cfg: DedupConfig) ->
     inner_keys = rarest.filter(F.col("min_df") <= cfg.substring_gram_maxdf).select(
         "cid", "gram"
     )
-    new_ids = new.select("cid").distinct()
+    new_ids = new.select("cid").distinct().localCheckpoint()
 
     def only_new(df: DataFrame, key: str = "cid") -> DataFrame:
         return df.join(
@@ -227,24 +237,35 @@ class StreamingDedup:
 
     # -- one micro-batch ----------------------------------------------------
     def process_batch(self, turns_batch: DataFrame, batch_id: int) -> None:
+        cached: list[DataFrame] = []
+
+        def persist(df: DataFrame) -> DataFrame:
+            cached.append(df.persist())
+            return df
+
+        try:
+            self._process_batch(turns_batch, batch_id, persist)
+        finally:
+            # a failing stage (or an empty batch) must not leak cache blocks
+            for df in cached:
+                df.unpersist()
+
+    def _process_batch(self, turns_batch: DataFrame, batch_id: int, persist) -> None:
         cfg = self.cfg
         seq = F.lit(int(batch_id)).cast("long")
-        new = add_signatures(reconstruct_conversations(turns_batch), cfg).persist()
+        new = persist(add_signatures(reconstruct_conversations(turns_batch), cfg))
         if new.isEmpty():
-            new.unpersist()  # empty micro-batches must not leak cache blocks
             return
         stored = self.stored_conversations()
 
         # ---- conversations: O(batch) delta + tombstones for re-delivery --
         if stored is not None:
-            redelivered = (
-                new.select("conv_id")
-                .join(stored.select("conv_id"), "conv_id", "left_semi")
-                .persist()
+            redelivered = persist(
+                new.select("conv_id").join(stored.select("conv_id"), "conv_id", "left_semi")
             )
             n_redelivered = redelivered.count()
             stored_live = stored.join(redelivered, "conv_id", "left_anti")
-            all_ = stored_live.drop("_seq").unionByName(new).persist()
+            all_ = persist(stored_live.drop("_seq").unionByName(new))
         else:
             redelivered = None
             n_redelivered = 0
@@ -264,20 +285,20 @@ class StreamingDedup:
 
         assert_cid_unique(all_)
         cand = _incremental_candidates(new, all_, cfg)
-        new_pairs = verify_candidates(cand, all_, cfg).persist()
+        new_pairs = verify_candidates(cand, all_, cfg).localCheckpoint()
         self.io.write(new_pairs.withColumn("_seq", seq), "candidate_pairs", mode="append")
 
         # ---- incremental connected components -----------------------------
         # touched = endpoints of new matched edges + re-delivered convs;
         # affected components = stored components containing any touched node
-        new_matched = new_pairs.filter("is_match").select("conv_a", "conv_b").persist()
+        new_matched = new_pairs.filter("is_match").select("conv_a", "conv_b").localCheckpoint()
         touched = (
             new_matched.select(F.col("conv_a").alias("conv_id"))
             .unionByName(new_matched.select(F.col("conv_b").alias("conv_id")))
         )
         if redelivered is not None:
             touched = touched.unionByName(redelivered)
-        touched = touched.distinct()
+        touched = touched.distinct().localCheckpoint()
 
         prev_comps = self.stored_components()
         if prev_comps is not None:
@@ -285,28 +306,32 @@ class StreamingDedup:
                 prev_comps.join(touched, "conv_id", "left_semi")
                 .select("component_id")
                 .distinct()
+                .localCheckpoint()
             )
-            affected_members = prev_comps.join(
-                F.broadcast(affected_ids), "component_id", "left_semi"
-            ).select("conv_id")
+            affected_members = (
+                prev_comps.join(F.broadcast(affected_ids), "component_id", "left_semi")
+                .select("conv_id")
+                .localCheckpoint()
+            )
             # valid stored matched pairs inside affected components
             sp = self.stored_pairs()
-            sub_stored = sp.filter("is_match").join(
-                F.broadcast(affected_members.withColumnRenamed("conv_id", "conv_a")),
-                "conv_a",
-                "left_semi",
+            sub_stored = (
+                sp.filter("is_match")
+                .join(
+                    F.broadcast(affected_members.withColumnRenamed("conv_id", "conv_a")),
+                    "conv_a",
+                    "left_semi",
+                )
+                .localCheckpoint()
             )
             sub_pairs = sub_stored.select("conv_a", "conv_b").unionByName(new_matched)
-            all_affected = affected_members.unionByName(
-                touched
-            ).distinct()
+            all_affected = affected_members.unionByName(touched).distinct()
         else:
-            affected_members = None
             sub_pairs = new_matched
             sub_stored = None
             all_affected = touched
 
-        comps_new = connected_components(sub_pairs, cfg).persist()
+        comps_new = persist(connected_components(sub_pairs, cfg))
 
         # membership tombstones: every node whose component was re-solved
         self.io.write(
@@ -319,7 +344,7 @@ class StreamingDedup:
             new_pairs if sub_stored is None
             else sub_stored.select(*new_pairs.columns).unionByName(new_pairs)
         )
-        dec_new = make_decisions(comps_new, all_, pairs_for_conf, cfg)
+        dec_new = make_decisions(comps_new, all_, pairs_for_conf, cfg).localCheckpoint()
         old_groups = (
             affected_ids.withColumnRenamed("component_id", "group_id")
             if prev_comps is not None
@@ -334,13 +359,6 @@ class StreamingDedup:
         # ---- periodic compaction -------------------------------------------
         if self.compact_every and (int(batch_id) + 1) % self.compact_every == 0:
             self.compact()
-
-        for df in (new, new_pairs, new_matched, comps_new):
-            df.unpersist()
-        if all_ is not new:  # stored-corpus union persisted separately above
-            all_.unpersist()
-        if redelivered is not None:
-            redelivered.unpersist()
 
     # -- compaction ----------------------------------------------------------
     def compact(self) -> None:
