@@ -1644,22 +1644,23 @@ def _transcript_decisions_es_oracle() -> str:
 
 
 def _sigs_parquet_path() -> str:
-    """Signature-export path keyed by a fingerprint of the FULL config plus
-    a kernel version tag, so no signature-relevant change (num_perm, width,
-    shingle_k, minhash_seed, or the kernel itself) can ever pair a stale
-    export with a fresh engine run."""
+    """Signature-export path keyed by exactly the config fields the export
+    reads (shingle_k, num_perm, minhash_seed, minhash_width) plus a kernel
+    version tag: no signature-relevant change can pair a stale export with
+    a fresh engine run, and config fields the export never reads leave the
+    path — and with it the transcript_decisions oracle text — unchanged."""
     import hashlib
     import json
-    from dataclasses import asdict
 
     from transcript_dedup.config import DedupConfig
     from transcript_dedup.signatures import KERNEL_VERSION
 
     cfg = DedupConfig()
+    sig_fields = {
+        f: getattr(cfg, f) for f in ("shingle_k", "num_perm", "minhash_seed", "minhash_width")
+    }
     fp = hashlib.sha256(
-        json.dumps(
-            {"cfg": asdict(cfg), "kernel": KERNEL_VERSION}, sort_keys=True, default=str
-        ).encode()
+        json.dumps({"cfg": sig_fields, "kernel": KERNEL_VERSION}, sort_keys=True).encode()
     ).hexdigest()[:12]
     return f"/tmp/transcript_dedup_sigs_seed42_n200_{fp}.parquet"
 

@@ -1,102 +1,37 @@
-"""Physical-execution config knobs must never change results.
+"""Physical plan of the pairs stage.
 
-`hydration_join` picks the verify-stage join strategy and `lsh_cache_keys`
-persists the band-key frame — both are plan-level choices; the emitted
-candidate pairs, scores, and decisions must be bit-identical across every
-combination (the round-3 bench claims rest on this invariance).
+The verify and substring hydration joins are pinned to shuffled hash joins
+(the only plan that exists at corpus scale), and the production pairs stage
+(pipeline.detect_pairs) must never plan a cartesian or nested-loop join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from transcript_dedup.detectors import (
-    exact_candidates,
-    lsh_candidates,
-    substring_candidates,
-    verify_candidates,
-)
+from transcript_dedup.detectors import exact_candidates, verify_candidates
+from transcript_dedup.pipeline import detect_pairs
 from transcript_dedup.reconstruct import reconstruct_conversations
 from transcript_dedup.signatures import add_signatures
 
 
-def _pairs_fingerprint(spark, turns, cfg):
-    conv = add_signatures(reconstruct_conversations(turns), cfg).persist()
-    conv.count()
-    cand = (
-        exact_candidates(conv)
-        .unionByName(lsh_candidates(conv, cfg, None))
-        .unionByName(substring_candidates(conv, cfg, None, verify_mode="instr"))
-    )
-    pairs = verify_candidates(cand, conv, cfg)
-    row = pairs.agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("is_match").cast("long")).alias("m"),
-        F.expr("bit_xor(xxhash64(conv_a, conv_b, confidence, suggested_keep))").alias("h"),
-    ).collect()[0]
-    conv.unpersist()
-    return (int(row["n"]), int(row["m"]), int(row["h"]))
-
-
-def test_hydration_and_keycache_variants_identical(spark, turns200, cfg):
-    variants = [
-        cfg.with_(hydration_join="auto", lsh_cache_keys=False),
-        cfg.with_(hydration_join="shuffle_hash", lsh_cache_keys=False),
-        cfg.with_(hydration_join="auto", lsh_cache_keys=True),
-        cfg.with_(hydration_join="shuffle_hash", lsh_cache_keys=True),
-        # pair_gen_partitions inserts a round-robin exchange before the LSH
-        # pair explosion — placement only, the pair set must not move
-        # (-1 auto is the default; 0 is the fused pre-round-6 plan)
-        cfg.with_(pair_gen_partitions=0),
-        cfg.with_(pair_gen_partitions=16),
-        cfg.with_(pair_gen_partitions=3),
-    ]
-    fps = {_pairs_fingerprint(spark, turns200, c) for c in variants}
-    assert len(fps) == 1, f"physical config changed results: {fps}"
-
-
-def test_split_hydration_bit_identical(spark, turns200, cfg):
-    """cfg.split_hydration routes content-equal pairs through a light
-    (array-free) hydration sub-path — the 100 TB posture where degenerate
-    exact-dup cliques dominate the pair mass. Every emitted value
-    (est_jaccard, hamming, confidence, match_reasons, suggested_keep) must
-    be bit-identical to the single-pass plan."""
-    conv = add_signatures(reconstruct_conversations(turns200), cfg).persist()
-    conv.count()
-
-    def rows(c):
-        cand = (
-            exact_candidates(conv)
-            .unionByName(lsh_candidates(conv, c, None))
-            .unionByName(substring_candidates(conv, c, None, verify_mode="instr"))
-        )
-        out = verify_candidates(cand, conv, c)
-        return {
-            (
-                r["conv_a"], r["conv_b"], r["is_match"], r["confidence"],
-                round(r["est_jaccard"], 9), r["hamming"],
-                tuple(r["match_reasons"]), r["suggested_keep"],
-            )
-            for r in out.collect()
-        }
-
-    base = rows(cfg.with_(split_hydration=False))
-    split = rows(cfg.with_(split_hydration=True))
-    conv.unpersist()
-    assert base, "vacuous: no candidate pairs"
-    assert base == split
-
-
 def test_pipeline_plan_shape_gate(spark, turns200, cfg):
     """Plan-shape regression gate (round-6): render the physical plan of the
-    full pairs stage exactly as the pipeline runs it — all three detector
-    arms unioned, hydrated, verified — and pin the properties the 100 TB
-    audit rests on: no CartesianProduct, no BroadcastNestedLoopJoin
-    anywhere, hydration on ShuffledHashJoin, and the hydration join keys on
-    the dictionary-encoded cid longs (a_cid/b_cid), not the conv_id
-    strings. A future change that silently regresses any of these fails
+    full pairs stage from the production entry point (detect_pairs: all
+    three detector arms unioned, hydrated, verified) and pin the properties
+    the 100 TB audit rests on: no CartesianProduct, no
+    BroadcastNestedLoopJoin anywhere, hydration on ShuffledHashJoin, and the
+    hydration join keys on the dictionary-encoded cid longs (a_cid/b_cid),
+    not the conv_id strings. Rendered below and above the hot-key pre-pass
+    floor (above it, the eager pre-pass feeds a broadcast hot-key map into
+    the band grouping; cap 2 + unsampled probe make that map non-empty at
+    this size). A future change that silently regresses any of these fails
     here instead of surfacing as a bench cliff. The same plan is archived
     in BENCH/PLANS.md by tools/explain_plans.py."""
+    variants = {
+        "below floor": cfg,
+        "above floor": cfg.with_(
+            band_hot_prepass_min_rows=0, band_key_cap=2, band_hot_sample_mod=1
+        ),
+    }
     # assert under BOTH AQE settings: the library session default runs AQE
     # on; the local-mode bench pipeline runs AQE off (round-7, measured
     # stage-wave latency). The 100 TB-audit properties must hold in both.
@@ -104,19 +39,20 @@ def test_pipeline_plan_shape_gate(spark, turns200, cfg):
     try:
         for aqe in ("true", "false"):
             spark.conf.set("spark.sql.adaptive.enabled", aqe)
-            conv = add_signatures(reconstruct_conversations(turns200), cfg)
-            cand = (
-                exact_candidates(conv)
-                .unionByName(lsh_candidates(conv, cfg, None))
-                .unionByName(substring_candidates(conv, cfg, None, verify_mode="instr"))
-            )
-            pairs = verify_candidates(cand, conv, cfg)
-            plan = pairs._jdf.queryExecution().executedPlan().toString()
-            ctx = f" (aqe={aqe})"
-            assert "CartesianProduct" not in plan, "cartesian join regressed" + ctx
-            assert "BroadcastNestedLoopJoin" not in plan, "BNLJ regressed" + ctx
-            assert "ShuffledHashJoin" in plan, "hydration lost shuffle_hash pin" + ctx
-            assert "a_cid#" in plan and "b_cid#" in plan, "hydration not cid-keyed" + ctx
+            for name, c in variants.items():
+                conv = add_signatures(reconstruct_conversations(turns200), c)
+                counters: dict = {}
+                pairs = detect_pairs(conv, c, counters)
+                plan = pairs._jdf.queryExecution().executedPlan().toString()
+                ctx = f" (aqe={aqe}, {name})"
+                assert "CartesianProduct" not in plan, "cartesian join regressed" + ctx
+                assert "BroadcastNestedLoopJoin" not in plan, "BNLJ regressed" + ctx
+                assert "ShuffledHashJoin" in plan, "hydration lost shuffle_hash pin" + ctx
+                assert "a_cid#" in plan and "b_cid#" in plan, "hydration not cid-keyed" + ctx
+                assert (counters["lsh_hot_keys_prepass"] > 0) == (name == "above floor"), (
+                    counters,
+                    ctx,
+                )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
@@ -124,7 +60,7 @@ def test_pipeline_plan_shape_gate(spark, turns200, cfg):
 def test_shuffle_hash_join_in_plan(spark, turns200, cfg):
     conv = add_signatures(reconstruct_conversations(turns200), cfg)
     cand = exact_candidates(conv)
-    pairs = verify_candidates(cand, conv, cfg.with_(hydration_join="shuffle_hash"))
+    pairs = verify_candidates(cand, conv, cfg)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan
     assert "BroadcastHashJoin" not in plan

@@ -8,6 +8,7 @@ import itertools
 
 import pytest
 
+from transcript_dedup.config import DedupConfig
 from transcript_dedup.generate import corpus_to_spark, generate_corpus
 from transcript_dedup.oracle import (
     build_records,
@@ -158,3 +159,13 @@ def test_determinism_under_repartition(spark, cfg, corpus200, tmp_path):
         for r in res0["decisions"].collect()
     }
     assert dec2 == dec0
+
+
+def test_config_rejects_probe_pattern_overflow():
+    """The tiny-path probe packs the pattern index into 24 bits and builds
+    at most 2 anchor patterns per needle, so a tiny cap whose doubled value
+    reaches 2^24 must be rejected up front."""
+    ok = (1 << 23) - 1
+    assert DedupConfig(substring_tiny_cap=ok).substring_tiny_cap == ok
+    with pytest.raises(ValueError, match="substring_tiny_cap"):
+        DedupConfig(substring_tiny_cap=1 << 23)

@@ -8,9 +8,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from transcript_dedup import pipeline
 from transcript_dedup.config import DedupConfig
-from transcript_dedup.detectors import exact_candidates, lsh_candidates
-from transcript_dedup.detectors.verify import verify_candidates
+from transcript_dedup.detectors import lsh
+from transcript_dedup.detectors.lsh import lsh_candidates
+from transcript_dedup.pipeline import detect_pairs
 from transcript_dedup.reconstruct import reconstruct_conversations
 from transcript_dedup.signatures import add_signatures
 
@@ -63,8 +65,7 @@ def test_skew_counters_and_bounded_candidates(spark, skewed_conv):
 
 def test_skew_no_false_merges(spark, skewed_conv):
     conv, cfg = skewed_conv
-    cand = exact_candidates(conv).unionByName(lsh_candidates(conv, cfg))
-    pairs = verify_candidates(cand, conv, cfg).filter("is_match")
+    pairs = detect_pairs(conv, cfg).filter("is_match")
     bad = pairs.filter(
         "(conv_a LIKE 't%' AND conv_b LIKE 't%')"
     ).count()
@@ -147,28 +148,34 @@ def test_lsh_prepass_counters_consistent(spark, skewed_conv):
         assert c_on[k] == c_off[k], (k, c_on, c_off)
 
 
+def _persisted_rdds(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _new_persisted(spark, before: set[int]) -> set[int]:
+    # entries created since ``before``; older ones may be garbage-collected
+    # meanwhile, so compare by difference, not equality
+    return _persisted_rdds(spark) - before
+
+
 def test_lsh_prepass_scale_floor(spark, skewed_conv):
     """n_conv at or below band_hot_prepass_min_rows skips the pre-pass
-    (no hot-key counters, no band-key cache registered) with a
-    bit-identical pair set; above the floor — or when n_conv is unknown —
-    the pre-pass runs as before."""
+    (no hot-key counters, nothing persisted) with a bit-identical pair set;
+    above the floor — or when n_conv is unknown — the pre-pass runs as
+    before."""
     conv, cfg = skewed_conv
     n = conv.count()
     base = {
         (r["conv_a"], r["conv_b"])
         for r in lsh_candidates(conv, cfg).distinct().collect()
     }
-    reg_small: list = []
+    before = _persisted_rdds(spark)
     c_small: dict = {}
-    small = {
-        (r["conv_a"], r["conv_b"])
-        for r in lsh_candidates(
-            conv, cfg, c_small, cache_registry=reg_small, n_conv=n
-        ).distinct().collect()
-    }
+    small_df = lsh_candidates(conv, cfg, c_small, n_conv=n)
+    assert not _new_persisted(spark, before)  # no band-key cache below the floor
+    small = {(r["conv_a"], r["conv_b"]) for r in small_df.distinct().collect()}
     assert small == base and len(base) > 0
     assert c_small["lsh_hot_keys_prepass"] == 0  # pre-pass skipped
-    assert reg_small == []  # no band-key cache without the pre-pass
     c_big: dict = {}
     big = {
         (r["conv_a"], r["conv_b"])
@@ -181,6 +188,56 @@ def test_lsh_prepass_scale_floor(spark, skewed_conv):
     }
     assert big == base
     assert c_big["lsh_hot_keys_prepass"] > 0  # pre-pass ran above the floor
+
+
+def test_lsh_prepass_releases_key_cache(spark, skewed_conv):
+    """With the pre-pass forced, lsh_candidates persists the band-key frame
+    for its eager passes only: nothing it persisted survives its return,
+    and running the returned frame re-persists nothing either."""
+    conv, cfg = skewed_conv
+    n = conv.count()
+    forced = cfg.with_(band_hot_prepass_min_rows=0)
+    before = _persisted_rdds(spark)
+    counters: dict = {}
+    pairs = lsh_candidates(conv, forced, counters, n_conv=n)
+    assert counters["lsh_hot_keys_prepass"] > 0  # the pre-pass really ran
+    assert not _new_persisted(spark, before)
+    assert pairs.count() > 0
+    assert not _new_persisted(spark, before)
+
+
+def test_lsh_prepass_failure_releases_key_cache(spark, skewed_conv, monkeypatch):
+    """A failure inside the pre-pass still releases the band-key cache."""
+    conv, cfg = skewed_conv
+    n = conv.count()
+
+    def boom(keys, c):
+        raise RuntimeError("injected pre-pass failure")
+
+    monkeypatch.setattr(lsh, "_hot_band_sizes", boom)
+    before = _persisted_rdds(spark)
+    with pytest.raises(RuntimeError, match="injected pre-pass"):
+        lsh_candidates(conv, cfg.with_(band_hot_prepass_min_rows=0), {}, n_conv=n)
+    assert not _new_persisted(spark, before)
+
+
+def test_detect_pairs_failure_leaves_nothing_persisted(spark, skewed_conv, monkeypatch):
+    """A detector failing after the LSH pre-pass ran (here the substring
+    arm) leaves no cache behind: detect_pairs holds none of its own, and
+    lsh_candidates released its band-key frame before returning."""
+    conv, cfg = skewed_conv
+    forced = cfg.with_(band_hot_prepass_min_rows=0)
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected substring failure")
+
+    monkeypatch.setattr(pipeline, "substring_candidates", boom)
+    before = _persisted_rdds(spark)
+    counters: dict = {}
+    with pytest.raises(RuntimeError, match="injected substring"):
+        detect_pairs(conv, forced, counters)
+    assert counters["lsh_hot_keys_prepass"] > 0  # the pre-pass cache existed
+    assert not _new_persisted(spark, before)
 
 
 def test_substring_gramless_fallback_paths(spark, cfg):

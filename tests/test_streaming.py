@@ -9,7 +9,7 @@ import pytest
 
 from transcript_dedup.config import DedupConfig
 from transcript_dedup.generate import corpus_to_spark, generate_corpus
-from transcript_dedup.pipeline import run_dedup_dataframes
+from transcript_dedup.pipeline import detect_pairs, run_dedup_dataframes
 from transcript_dedup.reconstruct import reconstruct_conversations
 from transcript_dedup.signatures import add_signatures
 from transcript_dedup.streaming import StreamingDedup
@@ -52,19 +52,8 @@ def test_incremental_equals_batch(spark, cfg, split_corpus, tmp_path):
         reconstruct_conversations(corpus_to_spark(spark, turns_pdf)), cfg
     )
     from transcript_dedup.cluster import connected_components
-    from transcript_dedup.detectors import (
-        exact_candidates,
-        lsh_candidates,
-        substring_candidates,
-    )
-    from transcript_dedup.detectors.verify import verify_candidates
 
-    cand = (
-        exact_candidates(conv)
-        .unionByName(lsh_candidates(conv, cfg))
-        .unionByName(substring_candidates(conv, cfg, verify_mode="instr"))
-    )
-    pairs = verify_candidates(cand, conv, cfg)
+    pairs = detect_pairs(conv, cfg)
     want = {
         r["conv_id"]: r["component_id"]
         for r in connected_components(pairs.filter("is_match"), cfg).collect()
@@ -104,12 +93,6 @@ def test_redelivery_and_compaction(spark, cfg, split_corpus, tmp_path):
     import pandas as pd
 
     from transcript_dedup.cluster import connected_components
-    from transcript_dedup.detectors import (
-        exact_candidates,
-        lsh_candidates,
-        substring_candidates,
-    )
-    from transcript_dedup.detectors.verify import verify_candidates
 
     _, turns_pdf, _ = split_corpus
     # batch 0: full corpus; batch 1: re-deliver 10 conversations with edited
@@ -137,12 +120,7 @@ def test_redelivery_and_compaction(spark, cfg, split_corpus, tmp_path):
     conv = add_signatures(
         reconstruct_conversations(corpus_to_spark(spark, final_pdf)), cfg
     )
-    cand = (
-        exact_candidates(conv)
-        .unionByName(lsh_candidates(conv, cfg))
-        .unionByName(substring_candidates(conv, cfg, verify_mode="instr"))
-    )
-    pairs = verify_candidates(cand, conv, cfg)
+    pairs = detect_pairs(conv, cfg)
     want = {
         r["conv_id"]: r["component_id"]
         for r in connected_components(pairs.filter("is_match"), cfg).collect()

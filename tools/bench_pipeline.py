@@ -82,12 +82,9 @@ def main():
     res = run_dedup_dataframes(conv, cfg)
     n_dec = res["decisions"].count()
     wall = time.perf_counter() - t0
-    # conv count comes from the cid-injectivity aggregation the timed
-    # pipeline already ran (run_dedup_dataframes) — the former untimed
-    # distinct-count pre-scan cost ~5-15 s of wall per subprocess launch
-    # (x16 launches per full bench protocol) for a number the run computes
-    # anyway. The timed region is unchanged.
-    n_convs = res["n_conv"]
+    # untimed: counts the pipeline's already-materialized conv cache, not
+    # the raw turns (a distinct-count pre-scan cost ~5-15 s per launch)
+    n_convs = res["conversations"].count()
     print(
         json.dumps(
             {

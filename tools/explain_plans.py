@@ -26,8 +26,9 @@ def main():
 
     import __spark_entry__ as E
     from transcript_dedup.config import DedupConfig
-    from transcript_dedup.detectors.lsh import lsh_candidates
+    from transcript_dedup.detectors import exact_candidates, lsh_candidates, verify_candidates
     from transcript_dedup.documents import signed_records
+    from transcript_dedup.pipeline import detect_pairs
     from transcript_dedup.session import get_spark
 
     spark = get_spark("plans", master="local[8]", shuffle_partitions=8)
@@ -42,27 +43,19 @@ def main():
     for name in ["tpch_q1_pricing", "top10_customers", "events_sessionize"]:
         sections.append((f"query: {name}", fmt(qs[name](spark, sf_dir))))
 
-    conv = signed_records(docs, DedupConfig())
-    sections.append(("LSH banded candidate join", fmt(lsh_candidates(conv, DedupConfig()))))
+    cfg = DedupConfig()
+    conv = signed_records(docs, cfg)
+    sections.append(("LSH banded candidate join", fmt(lsh_candidates(conv, cfg))))
 
-    from transcript_dedup.detectors import exact_candidates, substring_candidates
-    from transcript_dedup.detectors.verify import verify_candidates
-
-    pairs = verify_candidates(exact_candidates(conv), conv, DedupConfig())
+    pairs = verify_candidates(exact_candidates(conv), conv, cfg)
     sections.append(("verify stage (pair hydration + est-Jaccard + Hamming)", fmt(pairs)))
 
-    # the full pairs stage exactly as the pipeline runs it: all three
+    # the full pairs stage from the production entry point: all three
     # detector arms unioned, then hydrated + verified — the plan the
     # no-cartesian/no-BNLJ audit (and tests/test_physical_config.py's
     # plan-shape gate) cares about, with the cid-keyed exchanges visible
-    cfg = DedupConfig()
-    cand3 = (
-        exact_candidates(conv)
-        .unionByName(lsh_candidates(conv, cfg, None))
-        .unionByName(substring_candidates(conv, cfg, None, verify_mode="instr"))
-    )
     sections.append(
-        ("full pairs stage (exact ∪ LSH ∪ substring -> verify)", fmt(verify_candidates(cand3, conv, cfg)))
+        ("full pairs stage (detect_pairs: exact ∪ LSH ∪ substring -> verify)", fmt(detect_pairs(conv, cfg)))
     )
 
     # embeddings sign-LSH: ONE ArrowEvalPython pass computes every table's

@@ -91,7 +91,9 @@ class DedupConfig:
     # hard cap on the tiny-path (exhaustive broadcast) fallback doc count —
     # a boilerplate-degenerate corpus would otherwise route unbounded work
     # into the corpus-scan nested-loop join. Overflow fails loud when the
-    # pipeline runs with counters (the production path).
+    # pipeline runs with counters (the production path). The probe kernel
+    # packs the pattern index into 24 bits and each needle contributes at
+    # most 2 anchor patterns, so __post_init__ bounds 2 * cap below 2^24.
     substring_tiny_cap: int = 10_000
 
     # --- skew handling ------------------------------------------------------
@@ -125,7 +127,9 @@ class DedupConfig:
     # is identical either way (the post-aggregation stop/salt logic is the
     # same decision procedure — pinned by the pair-set invariance test);
     # only the memory bound depends on it, exactly like cc_driver_threshold.
-    # Callers that don't know the corpus size keep the pre-pass.
+    # Callers that don't know the corpus size keep the pre-pass. When the
+    # pre-pass runs, lsh_candidates persists the band-key frame for its
+    # eager sample/count passes only and releases it before returning.
     band_hot_prepass_min_rows: int = 1_000_000
 
     # --- internal id encoding -------------------------------------------------
@@ -137,43 +141,6 @@ class DedupConfig:
     # an independent draw; corpora far beyond 1e9 docs should shard the
     # dedup run (or widen cid) rather than retry seeds.
     cid_seed: int = 0
-
-    # --- physical execution ---------------------------------------------------
-    # verify-stage hydration join strategy. "shuffle_hash" forces a shuffled
-    # hash join of pairs against the conversation feature table — the only
-    # plan that exists at 10^12-turn scale (the conv side cannot be
-    # broadcast), and at bench scale it removes ~12 s of driver-serial
-    # BroadcastExchange collect per side that AQE's auto-broadcast would pay.
-    # "auto" leaves the choice to Catalyst/AQE (used by the A/B ablation).
-    hydration_join: str = "shuffle_hash"
-    # split the verify hydration into a light (array-free) pass for
-    # content-equal pairs plus a full-array pass for the rest — the web-
-    # scale posture when degenerate exact-duplicate cliques dominate the
-    # candidate mass (their est-Jaccard is exactly 1.0 by signature
-    # identity, so the num_perm*8-byte minhash payload never ships for
-    # them). Bit-identical output either way (test_split_hydration_bit_
-    # identical); default off — at bench scale eq pairs are only ~4% of
-    # candidates and the extra join stages cost more than the bytes save.
-    split_hydration: bool = False
-    # persist the exploded band-key frame for the duration of the LSH pairs
-    # job: the hot-key pre-pass otherwise recomputes the 42-term band-hash
-    # explode (rows x bands) once per broadcast subtree (~3 passes total).
-    # Costs O(rows x bands) executor storage (spills to disk past memory);
-    # disable to trade compute for memory on storage-tight clusters.
-    lsh_cache_keys: bool = True
-    # round-robin repartition of the multi-member band buckets (a small
-    # fraction of group rows) between the band groupBy and the m^2 pair
-    # explosion. Without it the explosion fuses into the groupBy reducer
-    # task, so one partition's sum(m^2) over its buckets sets the stage's
-    # critical path (the last named straggler: ~5.5 s task vs 0.9 s median
-    # at pinned 4 cores). A positive value inserts one cheap exchange of
-    # just the sz>=2 bucket rows and spreads heavy buckets independently of
-    # the band-key hash. 0 keeps the fused single-shuffle plan; -1 (the
-    # default) auto-sizes to 4 x spark.sql.shuffle.partitions (measured
-    # round 6: at the bench's T4 width that is 32 slots — wall −4% mean
-    # across three interleaved pinned pairs, T1 neutral-to-positive,
-    # decisions bit-identical).
-    pair_gen_partitions: int = -1
 
     # --- clustering ----------------------------------------------------------
     cc_max_iters: int = 50
@@ -192,6 +159,12 @@ class DedupConfig:
             raise ValueError(
                 f"lsh_bands*lsh_rows ({self.lsh_bands}*{self.lsh_rows}) "
                 f"must equal num_perm ({self.num_perm})"
+            )
+        if 2 * self.substring_tiny_cap >= 1 << 24:
+            raise ValueError(
+                f"substring_tiny_cap ({self.substring_tiny_cap}) too large: "
+                "the probe key packs up to 2 anchor patterns per needle "
+                "into a 24-bit pattern index"
             )
 
 

@@ -16,14 +16,13 @@ verify.py scores the unioned candidates (compareFiles analogue,
 """
 
 from .exact import exact_candidates
-from .lsh import lsh_candidates, release_key_caches
+from .lsh import lsh_candidates
 from .substring import substring_candidates
 from .verify import verify_candidates
 
 __all__ = [
     "exact_candidates",
     "lsh_candidates",
-    "release_key_caches",
     "substring_candidates",
     "verify_candidates",
 ]

@@ -34,6 +34,15 @@ salt added to the grouping key — BEFORE the collect_list. Keys the sample
 misses (overwhelmingly < a few x cap) fall back to the identical
 post-aggregation filter/salt logic, so the emitted pair set is invariant to
 sampling accuracy; only the memory bound depends on it.
+
+The pre-pass is eager and driver-side: the hot-key map is collected to the
+driver (it is broadcast anyway) and its counters are read while the band-key
+frame is persisted, so the sample and exact-count passes do not each
+recompute the rows x bands explode. That cache lives only inside
+``lsh_candidates``: it is unpersisted before the function returns, on
+success or failure, and the lazy pairs frame it returns recomputes the
+explode once when it runs. Below ``band_hot_prepass_min_rows`` the pre-pass
+is skipped and nothing is persisted.
 """
 
 from __future__ import annotations
@@ -42,24 +51,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-
-# default registry for band-key frames persisted by lsh_candidates, alive
-# until the pairs output materializes; callers release them via
-# release_key_caches() once the pairs job commits. Callers that may run
-# concurrently in one driver (or that must guarantee release on failure)
-# pass their OWN list via cache_registry= and release exactly that list —
-# two pipelines sharing the process-wide default would unpersist each
-# other's live caches.
-_KEY_CACHES: list[DataFrame] = []
-
-
-def release_key_caches(registry: list[DataFrame] | None = None) -> None:
-    """Unpersist every band-key frame in ``registry`` (default: the
-    process-wide list). Safe to call any time after the pairs output is
-    materialized; idempotent."""
-    reg = _KEY_CACHES if registry is None else registry
-    while reg:
-        reg.pop().unpersist()
 
 
 def band_keys(conv: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -120,7 +111,6 @@ def lsh_candidates(
     conv: DataFrame,
     cfg: DedupConfig,
     counters: dict | None = None,
-    cache_registry: list[DataFrame] | None = None,
     n_conv: int | None = None,
 ) -> DataFrame:
     """conversations(minhash, n_shingles) -> (conv_a, conv_b, src='lsh'),
@@ -154,6 +144,9 @@ def lsh_candidates(
     assert). At or below cfg.band_hot_prepass_min_rows the hot-key
     pre-pass is skipped — see the config field's rationale; the pair set
     is identical either way, only the aggregation memory bound changes.
+
+    Leaves nothing persisted: the band-key cache the pre-pass reads is
+    released before this returns (see the module docstring).
     """
     if (
         n_conv is not None
@@ -161,80 +154,74 @@ def lsh_candidates(
         and cfg.band_hot_sample_mod > 0
     ):
         cfg = cfg.with_(band_hot_sample_mod=0)
+    prepass = cfg.band_hot_sample_mod > 0
     keys = band_keys(conv, cfg)
-    if cfg.lsh_cache_keys and cfg.band_hot_sample_mod > 0:
-        # the hot-key pre-pass reads the band-key frame three times (sample
-        # aggregation, exact-count aggregation, main grouping); without a
-        # cache each read recomputes the rows x bands explode from conv.
+    on = ["band_id", "band_hash"]
+    if prepass:
+        # the pre-pass reads the band-key frame up to three times (sample
+        # aggregation, exact-count aggregation, post-aggregation counters);
+        # without a cache each read recomputes the rows x bands explode.
         # MEMORY_AND_DISK: at cluster scale this frame is rows x bands wide
         # and must be allowed to spill rather than evict the conv cache.
-        # Registered in _KEY_CACHES; the pipeline unpersists it via
-        # release_key_caches() once the pairs output materializes.
         from pyspark import StorageLevel
 
-        keys = keys.persist(StorageLevel.MEMORY_AND_DISK)
-        (_KEY_CACHES if cache_registry is None else cache_registry).append(keys)
-    on = ["band_id", "band_hash"]
+        keys.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        if prepass:
+            hot_sizes = _hot_band_sizes(keys, cfg)
+            # eager and lineage-free: the map is broadcast, so it is
+            # driver-sized already; a local relation keeps the returned plan
+            # off the cache released below and leaves no checkpoint RDD
+            hot_rows = hot_sizes.collect()
+            hot = conv.sparkSession.createDataFrame(hot_rows, hot_sizes.schema)
+            keyed = keys.join(F.broadcast(hot), on, "left")
+        else:
+            hot_rows = []
+            keyed = keys.withColumn("hot_sz", F.lit(None).cast("long"))
 
-    if cfg.band_hot_sample_mod > 0:
-        hot = _hot_band_sizes(keys, cfg)
-        keyed = keys.join(F.broadcast(hot), on, "left")
-    else:
-        hot = None
-        keyed = keys.withColumn("hot_sz", F.lit(None).cast("long"))
+        # pre-drop: stop-band rows never reach the aggregation buffer
+        live = keyed.filter(
+            F.col("hot_sz").isNull() | (F.col("hot_sz") <= cfg.band_key_drop)
+        )
+        # pre-salt: known-hot keys group by (key, salt subgroup)
+        n_salts_pre = F.least(
+            F.lit(cfg.band_salt_max), F.ceil(F.col("hot_sz") / F.lit(cfg.band_key_cap))
+        )
+        # salt = pmod(cid, n): cid IS xxhash64(conv_id) (signatures.py), so
+        # this equals the pre-cid pmod(xxhash64(conv_id), n) salt bit-for-bit
+        # — the pair set is unchanged by the id encoding — and costs no
+        # extra hash
+        presalt = F.when(
+            F.col("hot_sz").isNotNull(), F.pmod(F.col("cid"), n_salts_pre)
+        ).otherwise(F.lit(0))
 
-    # pre-drop: stop-band rows never reach the aggregation buffer
-    live = keyed.filter(
-        F.col("hot_sz").isNull() | (F.col("hot_sz") <= cfg.band_key_drop)
-    )
-    # pre-salt: known-hot keys group by (key, salt subgroup)
-    n_salts_pre = F.least(
-        F.lit(cfg.band_salt_max), F.ceil(F.col("hot_sz") / F.lit(cfg.band_key_cap))
-    )
-    # salt = pmod(cid, n): cid IS xxhash64(conv_id) (signatures.py), so this
-    # equals the pre-cid pmod(xxhash64(conv_id), n) salt bit-for-bit — the
-    # pair set is unchanged by the id encoding — and costs no extra hash
-    presalt = F.when(
-        F.col("hot_sz").isNotNull(), F.pmod(F.col("cid"), n_salts_pre)
-    ).otherwise(F.lit(0))
+        groups = live.groupBy("band_id", "band_hash", presalt.alias("psalt")).agg(
+            F.collect_list("cid").alias("m"),
+            F.first("hot_sz").alias("hot_sz"),
+        )
+        sz = F.size("m")
+        is_pre = F.col("hot_sz").isNotNull()
 
-    groups = live.groupBy("band_id", "band_hash", presalt.alias("psalt")).agg(
-        F.collect_list("cid").alias("m"),
-        F.first("hot_sz").alias("hot_sz"),
-    )
-    sz = F.size("m")
-    is_pre = F.col("hot_sz").isNotNull()
-
-    if counters is not None:
-        hot_stats = (
-            hot.agg(
-                F.sum(F.when(F.col("hot_sz") > cfg.band_key_drop, F.col("hot_sz"))).alias("dr"),
-                F.sum((F.col("hot_sz") > cfg.band_key_drop).cast("long")).alias("dk"),
-                F.sum((F.col("hot_sz") <= cfg.band_key_drop).cast("long")).alias("sk"),
-                F.count("*").alias("hk"),
+        if counters is not None:
+            dropped = [r["hot_sz"] for r in hot_rows if r["hot_sz"] > cfg.band_key_drop]
+            # post-aggregation stats only describe keys the pre-pass missed
+            post = groups.filter(~is_pre).agg(
+                F.sum(F.when(sz > cfg.band_key_drop, sz)).alias("dropped_rows"),
+                F.sum((sz > cfg.band_key_drop).cast("long")).alias("dropped_keys"),
+                F.sum(
+                    ((sz > cfg.band_key_cap) & (sz <= cfg.band_key_drop)).cast("long")
+                ).alias("salted_keys"),
             ).collect()[0]
-            if hot is not None
-            else {"dr": 0, "dk": 0, "sk": 0, "hk": 0}
-        )
-        # post-aggregation stats only describe keys the pre-pass missed
-        post = groups.filter(~is_pre).agg(
-            F.sum(F.when(sz > cfg.band_key_drop, sz)).alias("dropped_rows"),
-            F.sum((sz > cfg.band_key_drop).cast("long")).alias("dropped_keys"),
-            F.sum(
-                ((sz > cfg.band_key_cap) & (sz <= cfg.band_key_drop)).cast("long")
-            ).alias("salted_keys"),
-        ).collect()[0]
-        counters["lsh_stop_band_rows"] = int(post["dropped_rows"] or 0) + int(
-            hot_stats["dr"] or 0
-        )
-        counters["lsh_stop_band_keys"] = int(post["dropped_keys"] or 0) + int(
-            hot_stats["dk"] or 0
-        )
-        counters["lsh_salted_keys"] = int(post["salted_keys"] or 0) + int(
-            hot_stats["sk"] or 0
-        )
-        counters["lsh_hot_keys_prepass"] = int(hot_stats["hk"] or 0)
-        counters["lsh_predropped_rows"] = int(hot_stats["dr"] or 0)
+            counters["lsh_stop_band_rows"] = int(post["dropped_rows"] or 0) + sum(dropped)
+            counters["lsh_stop_band_keys"] = int(post["dropped_keys"] or 0) + len(dropped)
+            counters["lsh_salted_keys"] = (
+                int(post["salted_keys"] or 0) + len(hot_rows) - len(dropped)
+            )
+            counters["lsh_hot_keys_prepass"] = len(hot_rows)
+            counters["lsh_predropped_rows"] = sum(dropped)
+    finally:
+        if prepass:
+            keys.unpersist()
 
     # post-aggregation salt for keys the sample missed; pre-salted groups are
     # already one salt subgroup, so every within-group pair is valid there
@@ -262,25 +249,26 @@ def lsh_candidates(
         )
     )
     buckets = groups.filter((sz >= 2) & (is_pre | (sz <= cfg.band_key_drop)))
-    n_pair_parts = cfg.pair_gen_partitions
-    if n_pair_parts < 0:
-        # auto: 4x the session shuffle width — enough round-robin slots that
-        # no slot collects several of the heavy buckets, cheap enough that
-        # the extra scheduling waves stay sub-second
-        try:
-            n_pair_parts = 4 * int(
-                buckets.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            # conf can be non-numeric (e.g. "auto" under some AQE setups)
-            n_pair_parts = 4 * buckets.sparkSession.sparkContext.defaultParallelism
-    if n_pair_parts > 0:
-        # break the reducer->explode fusion so no single groupBy partition's
-        # sum(m^2) sets the critical path (see config.pair_gen_partitions);
-        # round-robin placement only — the emitted pair set is unchanged
-        buckets = buckets.repartition(n_pair_parts)
+    # round-robin repartition of the multi-member buckets (a small fraction
+    # of group rows) between the band groupBy and the m^2 pair explosion.
+    # Without it the explosion fuses into the groupBy reducer task, so one
+    # partition's sum(m^2) over its buckets sets the stage's critical path
+    # (the last named straggler: ~5.5 s task vs 0.9 s median at pinned 4
+    # cores). 4x the session shuffle width gives enough slots that no slot
+    # collects several heavy buckets while the extra scheduling waves stay
+    # sub-second (round 6: wall -4% mean across three interleaved pinned
+    # pairs at T4, T1 neutral-to-positive). Placement only — the emitted
+    # pair set is unchanged.
+    try:
+        n_pair_parts = 4 * int(
+            buckets.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        )
+    except (TypeError, ValueError):
+        # conf can be non-numeric (e.g. "auto" under some AQE setups)
+        n_pair_parts = 4 * buckets.sparkSession.sparkContext.defaultParallelism
     return (
-        buckets.select(F.explode(pair_structs).alias("p"))
+        buckets.repartition(n_pair_parts)
+        .select(F.explode(pair_structs).alias("p"))
         .select(
             F.col("p.conv_a").alias("conv_a"),
             F.col("p.conv_b").alias("conv_b"),

@@ -421,9 +421,9 @@ def substring_candidates(
     # doc's class — a pair's inner (strictly shorter) doc either has a rare
     # sampled gram (gram path) or is tiny (tiny path), never both — so the
     # union needs no distinct to stay duplicate-free.
-    verified = hydrate_and_verify(
-        gram_pairs, conv, verify_mode, join_hint=cfg.hydration_join
-    ).select("conv_a", "conv_b")
+    verified = hydrate_and_verify(gram_pairs, conv, verify_mode).select(
+        "conv_a", "conv_b"
+    )
     tiny_verified = _tiny_pairs(conv, all_stopped, cfg, counters)
     # no materialization barrier anywhere in this detector: the single
     # downstream consumer (verify stage) triggers the whole dataflow in one
@@ -437,7 +437,6 @@ def hydrate_and_verify(
     raw: DataFrame,
     conv: DataFrame,
     verify_mode: str = "suffix_array",
-    join_hint: str = "shuffle_hash",
 ) -> DataFrame:
     """Candidate (conv_a, conv_b) cid pairs -> containment-verified pairs.
 
@@ -447,15 +446,15 @@ def hydrate_and_verify(
     detector above and the streaming incremental arm
     (streaming._incremental_substring).
 
-    ``join_hint="shuffle_hash"`` (default — same rationale as
-    config.hydration_join): the texts side is the whole corpus, so this is
+    Both hydration joins are pinned to shuffled hash joins (same rationale
+    as the verify stage's): the texts side is the whole corpus, so this is
     a shuffled key-equality join at any scale; without the hint Catalyst
     plans it as SortMergeJoin, which SORTS the full norm_text corpus twice
     (once per hydration side) plus the pair side — pure wasted work for an
-    equality join. "auto" restores planner choice."""
-    texts = conv.select("cid", "norm_text", F.length("norm_text").alias("len"))
-    if join_hint == "shuffle_hash":
-        texts = texts.hint("shuffle_hash")
+    equality join."""
+    texts = conv.select(
+        "cid", "norm_text", F.length("norm_text").alias("len")
+    ).hint("shuffle_hash")
     hyd = (
         raw.join(
             texts.select(

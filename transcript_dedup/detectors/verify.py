@@ -98,35 +98,44 @@ def verify_candidates(
         .agg(F.bit_or("_m").alias("src_mask"))
     )
 
-    def _hinted(df: DataFrame) -> DataFrame:
-        if cfg.hydration_join == "shuffle_hash":
-            # pairs <-> conv features is a key-equality join whose conv side
-            # is the whole corpus: at 10^12 turns it can only ever be a
-            # shuffled join, so run that plan at every scale. (Auto-broadcast
-            # of the conv side "works" at bench scale but serializes ~12 s of
-            # relation collect+build per side on the driver — measured, see
-            # BENCH/BASELINE.md round 3.)
-            return df.hint("shuffle_hash")
-        return df
-
     # hydration payload is shuffled twice (a/b side): keep it minimal.
     # role_seq is compared ONLY for equality, so ship its 64-bit hash
     # instead of the O(turns)-byte string (collision => a spurious +5
     # confidence, P ~ 2^-64 per pair — far below the content-hash arm's
     # own collision floor). cid leads (join key); conv_id rides as payload
     # only so the output can restore string ids.
-    light_cols = [
-        F.col("cid"),
-        F.col("conv_id"),
-        F.col("content_hash"),
-        F.col("simhash"),
-        F.col("n_shingles"),
-        F.col("total_chars"),
+    feats = conv.select(
+        "cid",
+        "conv_id",
+        "minhash",
+        "content_hash",
+        "simhash",
+        "n_shingles",
+        "total_chars",
         F.xxhash64("role_seq").alias("role_key"),
-        F.col("completeness"),
-    ]
-
-    _scored_cols = lambda: [  # noqa: E731 — shared projection of both paths
+        "completeness",
+    )
+    # pairs <-> conv features is a key-equality join whose conv side is the
+    # whole corpus: at 10^12 turns it can only ever be a shuffled join, so
+    # run that plan at every scale. (Auto-broadcast of the conv side "works"
+    # at bench scale but serializes ~12 s of relation collect+build per side
+    # on the driver — measured, see BENCH/BASELINE.md round 3.)
+    a = feats.toDF(*[f"a_{c}" for c in feats.columns]).hint("shuffle_hash")
+    b = feats.toDF(*[f"b_{c}" for c in feats.columns]).hint("shuffle_hash")
+    hyd = (
+        srcs.join(a, srcs.conv_a == a.a_cid)
+        .join(b, srcs.conv_b == b.b_cid)
+        .drop("a_cid", "b_cid")
+    )
+    est_j = (
+        F.aggregate(
+            F.zip_with("a_minhash", "b_minhash", lambda x, y: (x == y).cast("int")),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        )
+        / F.lit(cfg.num_perm)
+    )
+    scored = hyd.withColumn("est_jaccard", est_j).select(
         "a_conv_id",
         "b_conv_id",
         "src_mask",
@@ -144,77 +153,7 @@ def verify_candidates(
         (F.col("a_role_key") == F.col("b_role_key")).alias("m_roles"),
         quality_score("a_").alias("a_q"),
         quality_score("b_").alias("b_q"),
-    ]
-
-    n_perm = cfg.num_perm
-
-    def _est_j() -> F.Column:
-        return (
-            F.aggregate(
-                F.zip_with("a_minhash", "b_minhash", lambda x, y: (x == y).cast("int")),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            )
-            / F.lit(n_perm)
-        ).alias("est_jaccard")
-
-    if not cfg.split_hydration:
-        feats = conv.select(light_cols[:2] + [F.col("minhash")] + light_cols[2:])
-        a = _hinted(feats.toDF(*[f"a_{c}" for c in feats.columns]))
-        b = _hinted(feats.toDF(*[f"b_{c}" for c in feats.columns]))
-        hyd = (
-            srcs.join(a, srcs.conv_a == a.a_cid)
-            .join(b, srcs.conv_b == b.b_cid)
-            .drop("a_cid", "b_cid")
-        )
-        scored = hyd.withColumn("est_jaccard", _est_j()).select(_scored_cols())
-    else:
-        # 100 TB posture for exact-clique-dominated corpora: hydrate every
-        # pair with the LIGHT payload only (content_hash + xxhash64(minhash)
-        # sig fingerprint + scalars, ~70 B/side vs num_perm*8 B), then ship
-        # the full arrays ONLY for pairs whose content differs. Content-equal
-        # pairs have bit-identical signatures, so est_jaccard is exactly 1.0
-        # and Hamming 0 — no arrays needed; a pair would be misrouted only
-        # under a simultaneous 64-bit content_hash AND 64-bit sig-key
-        # collision between different texts (P ~ 2^-128 per pair, far below
-        # the exact arm's own collision floor). The light join subtree is
-        # evaluated once per branch (exchange reuse dedups the feats scan);
-        # the heavy join runs over the residual pairs only. Measured at
-        # bench scale: neutral (eq pairs are 3.8% of candidates on the
-        # generated corpus — NOTES.md round 4); at web scale with degenerate
-        # duplicate cliques the skipped bytes dominate. Bit-identity with
-        # the single-pass plan is pinned by
-        # tests/test_physical_config.py::test_split_hydration_bit_identical.
-        light = conv.select(
-            light_cols[:2] + [F.xxhash64("minhash").alias("sig_key")] + light_cols[2:]
-        )
-        a = _hinted(light.toDF(*[f"a_{c}" for c in light.columns]))
-        b = _hinted(light.toDF(*[f"b_{c}" for c in light.columns]))
-        hyd = (
-            srcs.join(a, srcs.conv_a == a.a_cid)
-            .join(b, srcs.conv_b == b.b_cid)
-            .drop("a_cid", "b_cid")
-        )
-        eq = (F.col("a_content_hash") == F.col("b_content_hash")) & (
-            F.col("a_sig_key") == F.col("b_sig_key")
-        )
-        eq_scored = (
-            hyd.filter(eq)
-            .withColumn("est_jaccard", F.lit(1.0))
-            .select(_scored_cols())
-        )
-        heavy = conv.select("cid", "minhash")
-        ha = _hinted(heavy.toDF("ha_cid", "a_minhash"))
-        hb = _hinted(heavy.toDF("hb_cid", "b_minhash"))
-        neq_scored = (
-            hyd.filter(~eq)
-            .join(ha, F.col("conv_a") == F.col("ha_cid"))
-            .join(hb, F.col("conv_b") == F.col("hb_cid"))
-            .drop("ha_cid", "hb_cid")
-            .withColumn("est_jaccard", _est_j())
-            .select(_scored_cols())
-        )
-        scored = eq_scored.unionByName(neq_scored)
+    )
     # second factor on the exact arm: identical texts have identical minhash
     # arrays, so est_jaccard == 1.0 exactly; a 64-bit content_hash collision
     # between different texts (expected O(1) at 10^10 docs) would need a

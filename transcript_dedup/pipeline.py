@@ -22,6 +22,7 @@ import hashlib
 import json
 from dataclasses import asdict
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,7 +32,6 @@ from .decide import find_conflicts, make_decisions
 from .detectors import (
     exact_candidates,
     lsh_candidates,
-    release_key_caches,
     substring_candidates,
     verify_candidates,
 )
@@ -43,6 +43,40 @@ from .signatures import KERNEL_VERSION, add_signatures, assert_cid_unique
 
 def _fp(*parts) -> str:
     return hashlib.sha256("|".join(str(p) for p in parts).encode()).hexdigest()[:16]
+
+
+def detect_pairs(
+    conv: DataFrame,
+    cfg: DedupConfig,
+    counters: dict | None = None,
+    substring_verify_mode: str = "instr",
+) -> DataFrame:
+    """conversations -> verified candidate_pairs: the one pair-detection path.
+
+    The exact, LSH and substring detectors each emit cid-keyed candidate
+    edges; their union is hydrated, verified and scored once by
+    verify_candidates. Returns that lazy frame; nothing stays persisted.
+
+    Runs one eager job first: the cid-injectivity guard. Every detector keys
+    on cid, so a (loud) xxhash64 birthday collision must abort before any
+    pair is emitted (remediation: bump cfg.cid_seed). Its row count is
+    stored as ``counters["n_conv_cid_checked"]`` and lets lsh_candidates
+    skip the hot-key pre-pass below cfg.band_hot_prepass_min_rows.
+
+    The detectors are looked up as this module's globals on every call, so a
+    caller can wrap them per layer (the benchmark's traced run does).
+    """
+    n_conv = assert_cid_unique(conv)
+    if counters is not None:
+        counters["n_conv_cid_checked"] = n_conv
+    cand = (
+        exact_candidates(conv)
+        .unionByName(lsh_candidates(conv, cfg, counters, n_conv=n_conv))
+        .unionByName(
+            substring_candidates(conv, cfg, counters, verify_mode=substring_verify_mode)
+        )
+    )
+    return verify_candidates(cand, conv, cfg)
 
 
 class DedupPipeline:
@@ -115,44 +149,16 @@ class DedupPipeline:
         # conv row count comes from the committed snapshot manifest — no job
         n_conv = self.io.current_snapshot("conversations")["rows"]
 
-        # per-run cache registry: concurrent pipelines in one driver must not
-        # release each other's live band-key caches, and a failed run must
-        # not leak its own (finally below)
-        key_caches: list[DataFrame] = []
-
-        def build_pairs(counters):
-            # id contract first: every detector keys on cid, so a (loud)
-            # birthday collision must abort before any pair is emitted. Runs
-            # only when the stage builds — a fully-resumed run stays scanless.
-            counters["n_conv_cid_checked"] = assert_cid_unique(conv)
-            cand = (
-                exact_candidates(conv)
-                .unionByName(
-                    lsh_candidates(
-                        conv,
-                        cfg,
-                        counters,
-                        cache_registry=key_caches,
-                        n_conv=counters["n_conv_cid_checked"],
-                    )
-                )
-                .unionByName(
-                    substring_candidates(
-                        conv, cfg, counters, verify_mode=substring_verify_mode
-                    )
-                )
-            )
-            return verify_candidates(cand, conv, cfg)
-
+        # detect_pairs runs the cid guard only when the stage builds — a
+        # fully-resumed run stays scanless
         fp_pairs = _fp("candidate_pairs", fp_conv, snap_conv)
-        try:
-            pairs, snap_pairs = self._stage(
-                "candidate_pairs", fp_pairs, build_pairs, n_conv, resume
-            )
-        finally:
-            # the pairs snapshot is committed (or the stage failed) — this
-            # run's LSH band-key cache is dead either way
-            release_key_caches(key_caches)
+        pairs, snap_pairs = self._stage(
+            "candidate_pairs",
+            fp_pairs,
+            lambda c: detect_pairs(conv, cfg, c, substring_verify_mode),
+            n_conv,
+            resume,
+        )
 
         fp_comp = _fp("components", fp_pairs, snap_pairs)
         comps, snap_comp = self._stage(
@@ -197,8 +203,6 @@ def run_dedup_dataframes(
     """Pure-DataFrame composition of the detect->verify->cluster->decide
     stages (no TableIO, no metrics) — for embedding the engine in other
     dataflows (e.g. the driver's documents-table queries)."""
-    from pyspark import StorageLevel
-
     cfg = cfg or DedupConfig()
     # persist, not localCheckpoint: a round-8 A/B replaced this with a
     # lineage-truncating localCheckpoint (1-node plan for the ~8 downstream
@@ -207,61 +211,19 @@ def run_dedup_dataframes(
     # the columnar InMemoryRelation cache out-reads the checkpointed
     # row-object RDD across the pairs job's 6-8 full conv passes, and the
     # driver-side planning the truncation saves is only ~1 s/run here.
+    # detect_pairs' cid guard is the first action, so it materializes the
+    # cache before the pairs job fans conv out into many concurrent AQE
+    # query-stages (racing past an unpopulated cache recomputes the
+    # signature kernel once per racing stage — measured).
     if conv.storageLevel == StorageLevel.NONE:
         conv = conv.persist()
-    # materialize the cache NOW: the pairs job fans conv out into many
-    # concurrent AQE query-stages, and racing past an unpopulated cache
-    # recomputes the signature kernel once per racing stage (measured).
-    # The action doubles as the cid-injectivity guard (loud abort on an
-    # xxhash64 birthday collision — remediation: bump cfg.cid_seed).
-    n_conv = assert_cid_unique(conv)
-    key_caches: list = []
-    cand = exact_candidates(conv).unionByName(
-        lsh_candidates(conv, cfg, counters, cache_registry=key_caches, n_conv=n_conv)
-    )
-    # overlap the LSH band-key cache population with the substring
-    # detector's serial take-chain (below): the hot-key pre-pass's first
-    # broadcast subtree otherwise pays the rows x bands explode on the
-    # pairs job's critical path (~3.6 s of driver-blocking broadcast
-    # collect at pinned 4 cores / 240k convs). Placement-only — the warm
-    # count just populates the same persisted frame the pre-pass reads;
-    # conv is already materialized, so there is no cache-population race.
-    # TD_KEYS_WARM=0 disables the overlap (A/B hook; also the escape hatch
-    # for drivers that must not run concurrent jobs). Same-JVM interleaved
-    # A/B at pinned 4 cores / 240k convs: 46.0/38.0 s (warm) vs 47.2/40.9
-    # (without) — decisions identical.
-    warm_thread = None
-    import os as _os
-    if key_caches and _os.environ.get("TD_KEYS_WARM", "1") == "1":
-        import threading
-
-        def _warm_keys(df=key_caches[0]):
-            try:
-                df.count()
-            except Exception:  # cache warming only; real errors resurface
-                pass  # in the pairs job, which recomputes independently
-
-        warm_thread = threading.Thread(target=_warm_keys, daemon=True)
-        warm_thread.start()
-    cand = cand.unionByName(
-        substring_candidates(conv, cfg, counters, verify_mode=substring_verify_mode)
-    )
     # verified pairs feed three consumers (CC edges, decision confidence,
     # caller) — persist so the detector cascade runs exactly once; the
     # eager count materializes the cache (same AQE-race rationale as conv)
-    # and lets the LSH band-key cache be released immediately after
-    pairs = verify_candidates(cand, conv, cfg).persist()
-    try:
-        pairs.count()
-    finally:
-        if warm_thread is not None:
-            # never unpersist the band-key frame under the warming job
-            warm_thread.join()
-        release_key_caches(key_caches)
+    pairs = detect_pairs(conv, cfg, counters, substring_verify_mode).persist()
+    pairs.count()
     comps = connected_components(pairs.filter("is_match"), cfg, counters)
     decisions = make_decisions(comps, conv, pairs, cfg)
-    # n_conv rides along so callers (bench_pipeline, profilers) don't pay a
-    # second full-corpus count job for a number this run already computed;
     # conversations is the PERSISTED conv — callers joining against it
     # reuse the populated cache instead of recomputing the kernel
     return {
@@ -269,7 +231,6 @@ def run_dedup_dataframes(
         "candidate_pairs": pairs,
         "components": comps,
         "decisions": decisions,
-        "n_conv": n_conv,
     }
 
 

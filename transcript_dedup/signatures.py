@@ -11,8 +11,10 @@ Graft analogue: the reference's per-record black-box extraction
 normalize -> k-shingle -> MinHash/SimHash per conversation.
 
 Hashing scheme (all deterministic, seedable, no wall clock):
-  shingle -> uint64 via blake2b(digest_size=8)  (stable across processes,
-             unlike Python's salted hash())
+  token   -> uint64 via a prefix-sum polynomial hash of its UTF-8 bytes,
+             length-salted and splitmix64-mixed (stable across processes,
+             unlike Python's salted hash()); shingle = the same rolling
+             combine over k consecutive token hashes
   MinHash: num_perm universal-ish permutations h_i(x) = a_i*x + b_i mod 2^64
            (multiply-add with natural uint64 wraparound), sig_i = min over
            the doc's shingle hashes.
@@ -28,7 +30,6 @@ import os
 import subprocess
 import tempfile
 from collections.abc import Iterator
-from hashlib import blake2b
 
 import numpy as np
 import pandas as pd
@@ -93,17 +94,6 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
         x = (x ^ (x >> _U64(30))) * _U64(0xBF58476D1CE4E5B9)
         x = (x ^ (x >> _U64(27))) * _U64(0x94D049BB133111EB)
         return x ^ (x >> _U64(31))
-
-
-def hash_strings_u64(strings: list[str]) -> np.ndarray:
-    """Stable 64-bit hashes of UTF-8 strings (blake2b/8) — slow path, kept
-    for arbitrary string lists (oracle helpers, tests)."""
-    if not strings:
-        return np.empty(0, dtype=np.uint64)
-    return np.frombuffer(
-        b"".join(blake2b(s.encode("utf-8"), digest_size=8).digest() for s in strings),
-        dtype="<u8",
-    ).copy()
 
 
 def _token_hashes(norm_text: str) -> np.ndarray:
@@ -465,180 +455,6 @@ def compute_signature_row(norm_text: str, cfg: DedupConfig, a: np.ndarray, b: np
 
 
 # --------------------------------------------------------------------------
-# Batch kernel: one segmented numpy computation per Arrow batch.
-#
-# Bit-identical to compute_signature_row per doc (asserted in tests): the
-# polynomial hashes are position-independent, so hashing the whole batch's
-# concatenated bytes in one prefix pass yields the same per-token /
-# per-shingle / per-gram values as the per-doc code. The per-doc python
-# overhead (dozens of small-array numpy calls per row) dominated kernel cost
-# at 240k docs; this replaces it with ~20 large-array ops per 10k-row batch.
-# --------------------------------------------------------------------------
-
-_SEP = 0  # NUL separator byte between docs in the concatenated buffer
-
-
-def compute_signatures_batch(texts: list[str], cfg: DedupConfig, a: np.ndarray, b: np.ndarray):
-    """Vectorized (minhash, simhash, n_shingles, sub_grams) for a doc batch.
-
-    Returns (list[list[int]], list[int], list[int], list[list[int]]).
-    """
-    ndocs = len(texts)
-    if ndocs == 0:
-        return [], [], [], []
-    raw = [t.encode("utf-8") for t in texts]
-    lens = np.fromiter((len(r) for r in raw), dtype=np.int64, count=ndocs)
-    data = b"\x00".join(raw)
-    n = len(data)
-    doc_starts = np.zeros(ndocs, dtype=np.int64)
-    np.cumsum(lens[:-1] + 1, out=doc_starts[1:])
-    doc_ends = doc_starts + lens
-
-    out_sig = [None] * ndocs
-    out_sim = [0] * ndocs
-    out_nsh = [0] * ndocs
-    out_grams: list[list[int]] = [[] for _ in range(ndocs)]
-    sview = np.int32 if cfg.minhash_width == 32 else np.int64
-    if n == 0:
-        empty_sig = _truncate_sig(
-            np.full(a.shape[0], _EMPTY_SIG_FILL, dtype=np.uint64), cfg.minhash_width
-        ).view(sview).tolist()
-        return [list(empty_sig) for _ in range(ndocs)], out_sim, out_nsh, out_grams
-
-    x = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-    pw, ipw = _powers(0, n)
-    with np.errstate(over="ignore"):
-        s = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum(x * pw[:n], out=s[1:])
-
-        # ---- tokens: boundaries at spaces, NULs, string ends --------------
-        brk = np.flatnonzero((x == _U64(32)) | (x == _U64(_SEP)))
-        tok_starts = np.concatenate(([0], brk + 1))
-        tok_ends = np.concatenate((brk, [n]))
-        nonempty_tok = tok_ends > tok_starts  # drop the empty token at each NUL
-        tok_starts, tok_ends = tok_starts[nonempty_tok], tok_ends[nonempty_tok]
-        tok_doc = np.searchsorted(doc_starts, tok_starts, side="right") - 1
-        th = (s[tok_ends] - s[tok_starts]) * ipw[tok_starts]
-        th = _splitmix64(th * _POLY_Q + (tok_ends - tok_starts).astype(np.uint64))
-
-        # ---- shingles: rolling combine of k token hashes within a doc -----
-        m = th.size
-        k = cfg.shingle_k
-        sig_all = np.full((ndocs, a.shape[0]), _EMPTY_SIG_FILL, dtype=np.uint64)
-        if m:
-            qpw, iqpw = _powers(1, m + 1)
-            s2 = np.zeros(m + 1, dtype=np.uint64)
-            np.cumsum(th * qpw[:m], out=s2[1:])
-            tok_counts = np.bincount(tok_doc, minlength=ndocs)
-            tok_off = np.zeros(ndocs, dtype=np.int64)
-            np.cumsum(tok_counts[:-1], out=tok_off[1:])
-            # full-k shingles where the window stays inside one doc
-            if m >= k:
-                i0 = np.arange(0, m - k + 1, dtype=np.int64)
-                ok = tok_doc[i0] == tok_doc[i0 + k - 1]
-                i0 = i0[ok]
-                sh = _splitmix64((s2[i0 + k] - s2[i0]) * iqpw[i0])
-                sh_doc = tok_doc[i0]
-            else:
-                sh = np.empty(0, dtype=np.uint64)
-                sh_doc = np.empty(0, dtype=np.int64)
-            # whole-doc shingle for docs with 0 < tokens < k
-            small = (tok_counts > 0) & (tok_counts < k)
-            if small.any():
-                ds = np.flatnonzero(small)
-                st = tok_off[ds]
-                en = st + tok_counts[ds]
-                sh_small = _splitmix64((s2[en] - s2[st]) * iqpw[st])
-                sh = np.concatenate((sh, sh_small))
-                sh_doc = np.concatenate((sh_doc, ds))
-            if sh.size:
-                # per-doc unique: sort by (doc, hash), drop consecutive dups
-                order = np.lexsort((sh, sh_doc))
-                sh, sh_doc = sh[order], sh_doc[order]
-                keep = np.ones(sh.size, dtype=bool)
-                keep[1:] = (sh[1:] != sh[:-1]) | (sh_doc[1:] != sh_doc[:-1])
-                sh, sh_doc = sh[keep], sh_doc[keep]
-                # segmented MinHash: chunk docs so the perm matrix stays small
-                seg_counts = np.bincount(sh_doc, minlength=ndocs)
-                seg_off = np.zeros(ndocs, dtype=np.int64)
-                np.cumsum(seg_counts[:-1], out=seg_off[1:])
-                docs_with = np.flatnonzero(seg_counts > 0)
-                CH = 200_000  # shingle-hash chunk (126 x CH x 8B ~ 200 MB)
-                lo = 0
-                while lo < docs_with.size:
-                    hi = lo
-                    tot = 0
-                    while hi < docs_with.size and (
-                        tot + seg_counts[docs_with[hi]] <= CH or hi == lo
-                    ):
-                        tot += seg_counts[docs_with[hi]]
-                        hi += 1
-                    ds = docs_with[lo:hi]
-                    idx0, idx1 = seg_off[ds[0]], seg_off[ds[-1]] + seg_counts[ds[-1]]
-                    block = sh[idx0:idx1]
-                    vals = a[:, None] * block[None, :] + b[:, None]
-                    cuts = (seg_off[ds] - idx0).astype(np.int64)
-                    mins = np.minimum.reduceat(vals, cuts, axis=1)
-                    sig_all[ds, :] = mins.T
-                    lo = hi
-                for d in range(ndocs):
-                    out_nsh[d] = int(seg_counts[d])
-
-        # ---- simhash: weighted bit votes per doc ---------------------------
-        if m:
-            bit_idx = np.arange(64, dtype=np.uint64)
-            votes = np.zeros((ndocs, 64), dtype=np.int64)
-            docs_tok = np.flatnonzero(tok_counts > 0)
-            CH = 400_000
-            lo = 0
-            while lo < docs_tok.size:  # doc-aligned chunks; tok_doc is sorted
-                hi = lo
-                tot = 0
-                while hi < docs_tok.size and (
-                    tot + tok_counts[docs_tok[hi]] <= CH or hi == lo
-                ):
-                    tot += tok_counts[docs_tok[hi]]
-                    hi += 1
-                ds = docs_tok[lo:hi]
-                t0, t1 = tok_off[ds[0]], tok_off[ds[-1]] + tok_counts[ds[-1]]
-                blk = th[t0:t1]
-                bits = ((blk[:, None] >> bit_idx[None, :]) & _U64(1)).astype(np.int64)
-                cuts = (tok_off[ds] - t0).astype(np.int64)
-                votes[ds, :] = np.add.reduceat(2 * bits - 1, cuts, axis=0)
-                lo = hi
-            packed = np.packbits((votes > 0).astype(np.uint8), axis=1, bitorder="little")
-            sims = packed.view("<u8").ravel().astype(np.uint64)
-            sims = np.where(tok_counts > 0, sims, _U64(0))
-            out_sim = sims.view(np.int64).tolist()
-
-        # ---- sampled grams: byte windows fully inside one doc --------------
-        k2 = cfg.substring_gram_k
-        if n >= k2:
-            i0 = np.arange(0, n - k2 + 1, dtype=np.int64)
-            d0 = np.searchsorted(doc_starts, i0, side="right") - 1
-            ok = (i0 + k2) <= doc_ends[d0]
-            i0, d0 = i0[ok], d0[ok]
-            gh = _splitmix64((s[i0 + k2] - s[i0]) * ipw[i0])
-            sel = gh % _U64(cfg.substring_mod) == _U64(0)
-            gh, gd = gh[sel], d0[sel]
-            if gh.size:
-                order = np.lexsort((gh, gd))
-                gh, gd = gh[order], gd[order]
-                keep = np.ones(gh.size, dtype=bool)
-                keep[1:] = (gh[1:] != gh[:-1]) | (gd[1:] != gd[:-1])
-                gh, gd = gh[keep], gd[keep]
-                ghi = gh.view(np.int64)
-                bounds = np.searchsorted(gd, np.arange(ndocs + 1))
-                for d in range(ndocs):
-                    if bounds[d + 1] > bounds[d]:
-                        out_grams[d] = ghi[bounds[d] : bounds[d + 1]].tolist()
-
-    sig_t = _truncate_sig(sig_all, cfg.minhash_width).view(sview)
-    out_sig = [sig_t[d].tolist() for d in range(ndocs)]
-    return out_sig, out_sim, out_nsh, out_grams
-
-
-# --------------------------------------------------------------------------
 # Native (C) kernel: the identical per-doc computation compiled with gcc -O3.
 #
 # The per-row numpy path above pays ~30 small-array numpy calls per doc
@@ -873,9 +689,9 @@ def add_signatures(conv_df, cfg: DedupConfig):
                 )
             else:
                 # per-row numpy fallback: on this class of box the doc-sized
-                # arrays stay cache-resident, beating the batch-segmented
-                # variant (compute_signatures_batch, kept + parity-tested)
-                # which streams multi-MB index arrays through DRAM.
+                # arrays stay cache-resident; a batch-segmented numpy kernel
+                # measured slower (it streams multi-MB index arrays through
+                # DRAM).
                 sigs, sims, counts, grams = [], [], [], []
                 for t in pdf["norm_text"].astype(str):
                     sg, sm, ns, gr = compute_signature_row(t, k, a, b)
